@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs the headline queries against SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Forces full materialization through the noop sink
   * (count() alone would let column pruning skip most of the work).
@@ -62,40 +60,52 @@ object Bench {
     "t14_mixture_sample", "t15_chunk_plan", "t16_vocab_top", "t17_bloom_contamination",
     "t18_gopher_rules")
 
+  /** The compact LAST line. The driver keeps only the last 2,000 chars of
+    * output, and the full line (~6 KB) never fits that tail, so this one
+    * must fit whole: `qmed` carries each query's median at 2 decimals
+    * under its unique prefix before the first underscore (q01, d07, ...;
+    * the 129 full names alone are ~2.4 KB). If those prefixes collide or
+    * the line would pass 1,900 chars (≥1000 s medians at sf≥1), `qmed`
+    * degrades to a `qmed_overflow` marker naming the artifact that holds
+    * every median — an oversized line would be cut and parse as nothing.
+    * `failed` lists the queries that threw in any timed sample, under the
+    * same short keys when they are unique.
+    */
+  def compactLine(total: Double, sfDir: String, artifact: String, geomean: Option[Double],
+      medians: Seq[(String, Double)], failed: Seq[String]): String = {
+    val names = (medians.map(_._1) ++ failed).distinct
+    val short = names.map(n => n -> n.takeWhile(_ != '_')).toMap
+    val unique = short.values.toSet.size == names.size
+    def key(n: String) = "\"" + (if (unique) short(n) else n) + "\""
+    val head = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir",""" +
+      s""""n_queries":${medians.length},"queries_artifact":"$artifact"""" +
+      geomean.fold("")(g => f""","climate":{"geomean":$g%.3f}""") +
+      s""","failed":${failed.map(key).mkString("[", ",", "]")}"""
+    val qmed = medians.map { case (n, m) => key(n) + f":$m%.2f" }.mkString("{", ",", "}")
+    val line = s"""$head,"qmed":$qmed}"""
+    if (unique && line.length <= 1900) line else s"""$head,"qmed_overflow":"$artifact"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // shuffle partitions default to thread count; decade-3+ runs (sf100,
-      // ~16 GB input) override upward so AQE has headroom to coalesce from
-      // — AQE can merge small partitions but never split an initial one
-      // except at skew joins, so the initial count is the scale ceiling
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // split sizing lives in SparkEntry.prep (compute-proportional — see
-      // the scaladoc there); prep's conf.set overrides builder values
-      // at bench scale the mid-size dims (orders, customer, part) are
-      // tens of MB — hash-joining them scan-side beats a shuffle; on a
-      // real cluster AQE makes the same call from runtime sizes
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // default 100-entry codegen cache evicts across a 29-query × 3-pass
-      // suite, recompiling every generated class each pass
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.prep(spark)
+    val spark = SparkEntry.session()
 
     val qs = SparkEntry.queries
-    def once(name: String, pass: Int): Double = {
+    // a query that throws yields no sample: its elapsed time would read as
+    // a fast run in the min, the median and the total
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def once(name: String, pass: Int): Option[Double] = {
       val t0 = System.nanoTime()
-      try qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] pass$pass $name $dt%.2fs")
-      dt
+      try {
+        qs(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        val dt = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[bench] pass$pass $name $dt%.2fs")
+        Some(dt)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] pass$pass $name FAILED: $e")
+        failed += name
+        None
+      }
     }
     // optional first arg: comma-separated query names — isolated runs for
     // variance triage (the driver always runs the full headline list)
@@ -129,7 +139,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     val samples = scala.collection.mutable.LinkedHashMap(
       names.map(n => n -> scala.collection.mutable.ArrayBuffer.empty[Double]): _*)
-    for (pass <- 1 to passes; n <- names) samples(n) += once(n, pass)
+    for (pass <- 1 to passes; n <- names) samples(n) ++= once(n, pass)
     // the host occasionally throttles for tens of seconds (CPU steal /
     // disk-burst windows, sometimes spanning several back-to-back samples);
     // an outlier keeps re-sampling until its min stops improving — two
@@ -137,28 +147,30 @@ object Bench {
     // so a bad window can't masquerade as a slow operator in the artifact.
     // best is the unconditional min of all samples; the 10% rule only
     // drives the staleness counter (r3 discarded an observed 7.88s min).
-    names.foreach { n =>
+    val timed = names.filter(samples(_).nonEmpty)
+    timed.foreach { n =>
       var best = samples(n).min
       var extra = 0
       var stale = 0
       while (best > outlierSec && extra < 6 && stale < 2) {
         extra += 1
-        val t = once(n, passes + extra)
-        samples(n) += t
-        if (t < best * 0.9) stale = 0 else stale += 1
-        best = math.min(best, t)
+        once(n, passes + extra).foreach { t =>
+          samples(n) += t
+          if (t < best * 0.9) stale = 0 else stale += 1
+          best = math.min(best, t)
+        }
       }
     }
     def med(xs: Seq[Double]): Double = {
       val s = xs.sorted
       if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
     }
-    val results = names.map(n => n -> samples(n).min)
+    val results = timed.map(n => n -> samples(n).min)
     val qJson = results.map { case (k, v) => "\"" + k + f"""\":$v%.3f""" }
       .mkString("{", ",", "}")
     // per-query dispersion record: sample count, min, median, max — the
     // protocol's full observability lands in the artifact itself
-    val sJson = names.map { n =>
+    val sJson = timed.map { n =>
       val xs = samples(n).toSeq
       "\"" + n + f"""\":{"n":${xs.length},"min":${xs.min}%.3f,"med":${med(xs)}%.3f,"max":${xs.max}%.3f}"""
     }.mkString("{", ",", "}")
@@ -174,7 +186,7 @@ object Bench {
     // only mean something against a near-1.0 climate. sf-dependent: the
     // controls are sf0.1 minima, so the stamp only emits on sf0.1 runs.
     val resultMap = results.toMap
-    val climate: Option[String] =
+    val climate: Option[(Double, String)] =
       if (!sfDir.endsWith("sf0.1")) None
       else try {
         val txt = java.nio.file.Files.readString(java.nio.file.Paths.get("BENCH_CONTROLS.json"))
@@ -195,24 +207,26 @@ object Bench {
         else {
           val geo = math.exp(ratios.map(r => math.log(r._2)).sum / ratios.size)
           val per = ratios.map { case (k, r) => "\"" + k + f"""\":$r%.2f""" }.mkString("{", ",", "}")
-          Some(f"""{"geomean":$geo%.3f,"controls":$per,"baseline":"BENCH_CONTROLS.json"}""")
+          Some(geo -> f"""{"geomean":$geo%.3f,"controls":$per,"baseline":"BENCH_CONTROLS.json"}""")
         }
       } catch { case _: Exception => None }
-    // the run's ACTUAL knobs, in-artifact (ADVICE r11: the sf100 probe ran
-    // shuffle.partitions=256 / outlier=10000s while the derived report's
-    // hardcoded config string claimed 32 — the artifact must self-describe
-    // so cross-config ratios are visible as such)
+    // the run's ACTUAL knobs, read back from the live session (ADVICE r11:
+    // the sf100 probe ran shuffle.partitions=256 / outlier=10000s while the
+    // derived report's hardcoded config string claimed 32 — the artifact
+    // must self-describe so cross-config ratios are visible as such)
+    val master = spark.sparkContext.master
+    val engine = SparkEntry.engineKeys.map(k => s""""$k":"${spark.conf.get(k)}"""")
+    val config = s"""{"master":"$master","passes":$passes,"outlier_sec":$outlierSec,""" +
+      engine.mkString("", ",", "}")
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    val config = s"""{"master":"local[$cpus]","shuffle_partitions":$shufflePartitions,""" +
-      s""""passes":$passes,"outlier_sec":$outlierSec,""" +
-      s""""max_partition_bytes":"${spark.conf.get("spark.sql.files.maxPartitionBytes")}"}"""
-    val protocol = s"local[$cpus], shuffle.partitions=$shufflePartitions; " +
+    val protocol = s"$master, shuffle.partitions=$shufflePartitions; " +
       s"untimed sf0.001 warmup; $passes interleaved full passes; " +
       s">${outlierSec}s outliers re-sampled until 2 consecutive samples within 10% of best (max +6); " +
       "queries=per-query min over all samples; stats=per-query n/min/med/max"
-    val climateField = climate.map(c => s""","climate":$c""").getOrElse("")
+    val climateField = climate.map(c => s""","climate":${c._2}""").getOrElse("")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","protocol":"$protocol","config":$config$climateField,"queries":$qJson,"stats":$sJson,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","protocol":"$protocol","config":$config$climateField,"queries":$qJson,"stats":$sJson,"failed":$failedJson,"sf":"$sfDir"}"""
     println(line)
     // The driver's BENCH_r{N}.json keeps only the last 2,000 chars of
     // output — the first ~40 query timings fall off every round. Persist
@@ -225,37 +239,14 @@ object Bench {
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), line + "\n")
       catch { case e: Exception => System.err.println(s"[bench] $outPath write failed: $e") }
     }
-    // The full line above is ~6 KB — longer than the driver's 2,000-char
-    // tail window, so its `parsed` field came up null every round (the
-    // window holds only the line's end). Print a SECOND, compact line
-    // LAST: it fits whole in the tail, so a parser scanning it always
-    // finds at least this one. r19 (VERDICT r18 item 2): the compact line
-    // now carries the PER-QUERY MEDIANS — two consecutive rounds of
-    // PERF_r{N} had n_common 0 because no per-query data survived the
-    // tail. The 129 full query names alone are ~2.4 KB (cannot ever fit
-    // 2,000 chars), so `qmed` keys are each query's UNIQUE prefix before
-    // the first underscore (q01..q81/d01../s01../m01../t01..; collisions
-    // would fall back to full names), values are medians over all samples
-    // at 2 decimals. Full names + 3-decimal min/med/max stay in the first
-    // line and in `outPath` (committed as BENCH_LOCAL.json); the former
-    // `slowest`/`config` fields of this line moved there too — the total
-    // line stays ~1.8 KB so the whole object survives any ≥2 KB tail.
-    val shortKeys: Map[String, String] = {
-      val pref = names.map(n => n -> n.takeWhile(_ != '_')).toMap
-      if (pref.values.toSeq.distinct.length == names.length) pref
-      else names.map(n => n -> n).toMap
-    }
-    val qmed = names.map { n =>
-      "\"" + shortKeys(n) + f"""\":${med(samples(n).toSeq)}%.2f"""
-    }.mkString("{", ",", "}")
-    val climateGeo = climate.map { c =>
-      // re-extract only the geomean for the compact line
-      val m = """"geomean":([0-9.]+)""".r.findFirstMatchIn(c).map(_.group(1))
-      m.map(g => s""","climate":{"geomean":$g}""").getOrElse("")
-    }.getOrElse("")
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir",""" +
-      s""""n_queries":${results.length},"queries_artifact":"$outPath"""" +
-      s"""$climateGeo,"qmed":$qmed}""")
+    // the full line never fits the driver's 2,000-char tail: print the
+    // compact one LAST (see compactLine)
+    println(compactLine(total, sfDir, outPath, climate.map(_._1),
+      timed.map(n => n -> med(samples(n).toSeq)), failed.toSeq))
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} query(s) FAILED: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 }

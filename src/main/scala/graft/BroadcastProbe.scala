@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.plans.BroadcastAudit
 
 /** Decade-2 spot probe for the static-broadcast built-size bound (VERDICT
@@ -53,25 +51,13 @@ object BroadcastProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names =
       if (args.length > 1) args(1).split(',').toSeq.filter(_.nonEmpty) else banded
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val alarmBytes = sys.env.getOrElse("GRAFT_BROADCAST_ALARM_BYTES",
       (1280L * 1024 * 1024).toString).toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the probe grades the plans the BENCH artifacts ship, so it must run
-      // in Bench's session climate — with the default 10 MB threshold the
-      // mid-size dims stop broadcasting and every banded plan degrades to
-      // fact-side sort-merge joins (measured: the sf10 probe run OOM-killed
-      // the host on tmpfs shuffle volume the bench never writes)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.prep(spark)
+    // Bench's engine: with the default 10 MB threshold the mid-size dims
+    // stop broadcasting and every banded plan degrades to fact-side
+    // sort-merge joins (measured: the sf10 probe run OOM-killed the host
+    // on tmpfs shuffle volume the bench never writes)
+    val spark = SparkEntry.session()
 
     var breaches = List.empty[String]
     val perQuery = names.map { name =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Keep-dominated-regime probe for the production-k SemDeDup pair
   * (d14 stand-in quantizer vs d15 Lloyd-trained): the cell-local prune's
   * cost model is two-sided — REMOVED vectors short-circuit at their first
@@ -51,20 +49,7 @@ object DedupRegimeProbe {
     val passes = if (args.length > 2) args(2).toInt else 3
     val variants =
       if (args.length > 3) args(3).split(',').toSeq else Seq("d14", "d15")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Bench's session climate (the sf10 OOM lesson: probes that run
-      // bench-family plans must match the bench's broadcast threshold)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.prep(spark)
+    val spark = SparkEntry.session()
     val emb = Tables.embeddings(spark, sfDir)
     def run(variant: String): Unit = variant match {
       case "d14" => operators.Dedup

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the executed plan of one query, or dump plans for many.
   *
   * Usage:
@@ -14,17 +12,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench's broadcast threshold so dumped plans match the
-      // benched join strategies
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.prep(spark)
     if (name == "ALL") {
       val outDir = java.nio.file.Paths.get(args(2))
       java.nio.file.Files.createDirectories(outDir)

@@ -68,6 +68,49 @@ object SparkEntry {
     spark
   }
 
+  /** The engine every main runs: `local[SPARK_GRAFT_CPUS]` (default 4)
+    * with SPARK_GRAFT_SHUFFLE_PARTITIONS shuffle partitions (default: the
+    * core count; sf100 runs raise it so AQE has headroom to coalesce from
+    * — AQE merges small partitions but never splits an initial one).
+    */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    session(cpus, sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").fold(cpus)(_.toInt))
+  }
+
+  /** The one session builder: the oracle gate, the specs, the bench and
+    * the probes all judge this engine. The codegen cache size is a static
+    * conf, so it must be set here, before the session exists; everything
+    * else plan-affecting is [[prep]]'s.
+    */
+  def session(cpus: Int, shufflePartitions: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // at bench scale the mid-size dims (orders, customer, part) are
+      // tens of MB — hash-joining them scan-side beats a shuffle; on a
+      // real cluster AQE makes the same call from runtime sizes
+      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
+      // the default 100-entry codegen cache evicts across a multi-pass
+      // suite, recompiling every generated class each pass
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    prep(spark)
+  }
+
+  /** The plan-affecting confs [[session]] and [[prep]] pin — read back
+    * from the live session into Bench's artifact, asserted by SessionSpec.
+    */
+  val engineKeys: Seq[String] = Seq(
+    "spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.codegen.cache.maxEntries", "spark.sql.ansi.enabled",
+    "spark.sql.session.timeZone", "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize")
+
   private def q(fn: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
     (s, dir) => fn(prep(s), dir)
 

@@ -31,7 +31,8 @@ object Dedup {
     *  - Labels persist per iteration and unpersist after the next is built
     *    — lineage stays O(1) plans deep, not O(iterations).
     *  - Iterations needed = component diameter (near-dup clusters are tiny,
-    *    2-4 hops); `maxIter` bounds adversarial chains.
+    *    2-4 hops); `maxIter` bounds adversarial chains. It must be EVEN:
+    *    hops run in pairs, so the loop cuts off only at an even cutoff.
     *
     * At 100 TB the pair graph is far smaller than the corpus (only
     * near-dups appear), so every iteration touches pair-scale data only.
@@ -42,6 +43,7 @@ object Dedup {
       bCol: String,
       maxIter: Int = 20,
       checkpointDir: Option[String] = None): DataFrame = {
+    require(maxIter % 2 == 0, s"maxIter must be even (hops run in pairs), got $maxIter")
     // lineage cutting + the local-vs-reliable cluster-prod choice live in
     // IterCkpt (one policy shared by every fixpoint operator)
     val ic = IterCkpt(pairs, checkpointDir)
@@ -86,12 +88,12 @@ object Dedup {
     // the job barriers and the label-table checkpoint write+read cycles;
     // the label trajectory is (jump∘hop)^2k, identical to the sequential
     // form at every hop count, so labels match the r18 implementation
-    // bit-for-bit even when maxIter cuts the loop off unconverged
-    // (spec-asserted against [[connectedComponentsSeq]]). Convergence is
-    // checked against the PAIR input (`prev` rides through both hops);
-    // every step is pointwise non-increasing, so pair-output = pair-input
-    // ⟺ both hops were no-ops — the sequential loop's exit decision is
-    // never missed, at worst one already-converged hop runs extra.
+    // bit-for-bit even when an even maxIter cuts the loop off unconverged
+    // (spec-asserted against the sequential loop, kept in test sources).
+    // Convergence is checked against the PAIR input (`prev` rides through
+    // both hops); every step is pointwise non-increasing, so pair-output =
+    // pair-input ⟺ both hops were no-ops — the sequential loop's exit
+    // decision is never missed, at worst one already-converged hop runs extra.
     while (!converged && iter < maxIter) {
       val lazies = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       // one hop over (node, label[, prev]): each node takes min(own label,
@@ -136,62 +138,6 @@ object Dedup {
       prevCkpt = next
       labels = next.select(col("node"), col("label"))
       iter += 2
-    }
-    release(sym)
-    labels.select(col("node").as("node_id"), col("label").as("cluster_id"))
-  }
-
-  /** The r18 sequential (one hop per materialization) loop, retained as
-    * the paired form's equality reference — never planned by queries.
-    * Identical sym construction; per iteration: neighbor-min + pointer
-    * jump, eager checkpoint, convergence action.
-    */
-  private[graft] def connectedComponentsSeq(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxIter: Int = 20,
-      checkpointDir: Option[String] = None): DataFrame = {
-    val ic = IterCkpt(pairs, checkpointDir)
-    def ckpt(df: DataFrame, eager: Boolean): DataFrame = ic(df, eager)
-    def release(df: DataFrame): Unit = ic.release(df)
-    val p = ckpt(pairs
-      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v")), true)
-    val sym = ckpt(p
-      .union(p.select(col("v").as("u"), col("u").as("v")))
-      .union(p.select(col("u"), col("u").as("v")))
-      .union(p.select(col("v").as("u"), col("v")))
-      .distinct()
-      .repartition(col("v")), true)
-    release(p)
-    var labels = ckpt(sym.groupBy(col("u")).agg(min(col("v")).as("mn"))
-      .select(col("u").as("node"), col("mn").as("label")), true)
-    var iter = 0
-    var converged = false
-    var prevCkpt = labels
-    while (!converged && iter < maxIter) {
-      val propagated = sym
-        .join(labels.withColumnRenamed("node", "v").withColumnRenamed("label", "vlab"), Seq("v"))
-        .groupBy(col("u").as("node"))
-        .agg(
-          min(col("vlab")).as("label"),
-          max(when(col("v") === col("u"), col("vlab"))).as("prev"))
-        .transform(d => ckpt(d, false))
-      val next = propagated
-        .join(
-          propagated.select(col("node").as("label"), col("label").as("ll")),
-          Seq("label"), "left")
-        .select(
-          col("node"),
-          coalesce(col("ll"), col("label")).as("label"),
-          (coalesce(col("ll"), col("label")) =!= col("prev")).as("changed"))
-        .transform(d => ckpt(d, true))
-      converged = next.where(col("changed")).isEmpty
-      release(propagated)
-      release(prevCkpt)
-      prevCkpt = next
-      labels = next.select(col("node"), col("label"))
-      iter += 1
     }
     release(sym)
     labels.select(col("node").as("node_id"), col("label").as("cluster_id"))

@@ -20,12 +20,14 @@ class CosinePreSpec extends SparkSpec {
     StructField("a", ArrayType(FloatType), nullable = true),
     StructField("b", ArrayType(FloatType), nullable = true)))
 
-  private def check(rows: Seq[(Seq[Float], Seq[Float])]): Unit = {
-    val df = spark.createDataFrame(
+  private def frame(rows: Seq[(Seq[Float], Seq[Float])]) =
+    spark.createDataFrame(
       java.util.Arrays.asList(rows.map { case (a, b) =>
         org.apache.spark.sql.Row(a, b)
       }: _*), schema)
-    val got = df.select(
+
+  private def check(rows: Seq[(Seq[Float], Seq[Float])]): Unit = {
+    val got = frame(rows).select(
         Similarity.cosine(col("a"), col("b")).as("fused"),
         Similarity.cosinePre(col("a"), col("b"),
           Similarity.norm(col("a")), Similarity.norm(col("b"))).as("pre"))
@@ -58,6 +60,26 @@ class CosinePreSpec extends SparkSpec {
       (neg, pos), (pos, pos), (neg, neg),
       (null, pos), (pos, null), (null, null),
       (null, zero), (zero, null)) ++ randoms)
+  }
+
+  test("ragged inputs diverge from cosineFF: the longer side's tail stays in its norm") {
+    // out of contract and deliberately unguarded (every call site scores
+    // fixed-dim embeddings; a length check would add per-pair work to the
+    // prune path). Both kernels dot over the common prefix, but only the
+    // fused one truncates the norms to it.
+    val long = Seq(1f, 2f, 3f)
+    val short = Seq(1f, 2f)
+    val got = frame(Seq((long, short), (short, long))).select(
+        Similarity.cosine(col("a"), col("b")),
+        Similarity.cosinePre(col("a"), col("b"),
+          Similarity.norm(col("a")), Similarity.norm(col("b"))),
+        Similarity.cosine(slice(col("a"), 1, 2), slice(col("b"), 1, 2)))
+      .collect()
+    got.foreach { r =>
+      assert(r.getDouble(0) == r.getDouble(2), "fused = cosine of the common prefix")
+      assert(r.getDouble(1) == 5.0 / (math.sqrt(14.0) * math.sqrt(5.0)), "pre keeps the full norm")
+      assert(r.getDouble(0) != r.getDouble(1))
+    }
   }
 
   test("cosinePre matches cosineFF on the real embeddings (all d05 pairs)") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{CcReference, Dedup, Similarity}
 
 class DedupSimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -288,10 +288,13 @@ class DedupSimilaritySpec extends SparkSpec {
     val mixed = ((0L until 20L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (101L, 102L), (200L, 201L))).toSeq
     for ((g, mi) <- Seq((chain, 4), (chain, 20), (mixed, 20), (mixed, 2))) {
-      val seq = run(Dedup.connectedComponentsSeq, g, mi)
+      val seq = run(CcReference.connectedComponentsSeq, g, mi)
       val par = run(Dedup.connectedComponents, g, mi)
       assert(par == seq, s"graph=${g.take(2)}... maxIter=$mi")
     }
+    // hops run in pairs: an odd cutoff would silently run maxIter + 1 hops
+    val odd = intercept[IllegalArgumentException](run(Dedup.connectedComponents, chain, 3))
+    assert(odd.getMessage.contains("maxIter must be even"))
   }
 
   test("ArgmaxCosStride matches the struct-max form it replaced; ties, strides, zero norms") {

@@ -6,16 +6,11 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local session for all specs. */
 object TestSession {
+  // Bench's engine at a fixed 4 cores / 4 partitions, whatever the env says
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = SparkEntry.session(4, 4)
     s.sparkContext.setLogLevel("ERROR")
-    SparkEntry.prep(s)
+    s
   }
   val sfDir = "/root/testdata/sf0.001"
   // one SF up — for pins that are vacuous on a query that selects no rows

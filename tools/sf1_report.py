@@ -81,12 +81,17 @@ big_cfg, small_cfg = run_config(big), run_config(small)
 # Only the EXECUTION keys decide whether ratios measure plan scaling;
 # passes/outlier_sec are sampling protocol (they change dispersion, not
 # per-query wall) and differing there is the designed per-scale dial.
-EXEC_KEYS = ("master", "shuffle_partitions", "max_partition_bytes")
+# Bench now reads the engine confs back from the session under their Spark
+# names (string values); older raws carry the short names.
+EXEC_KEYS = {"master": "master",
+             "shuffle_partitions": "spark.sql.shuffle.partitions",
+             "max_partition_bytes": "spark.sql.files.maxPartitionBytes"}
 
 
 def exec_view(cfg):
     if isinstance(cfg, dict) and "master" in cfg:
-        return {k: cfg.get(k) for k in EXEC_KEYS}
+        return {k: str(cfg.get(k, cfg.get(spark_key)))
+                for k, spark_key in EXEC_KEYS.items()}
     if isinstance(cfg, dict):  # merged raw: per-group configs
         views = [exec_view(v.get("config")) for v in cfg.values()
                  if isinstance(v, dict)]
