@@ -29,8 +29,7 @@ final case class ExportFile(
 final case class LoadPlan(full: ExportFile, incrementals: Seq[ExportFile]) {
   /** Everything the state table reflects after loading: max covered end. */
   def asOf: Long = (full +: incrementals).map(_.endTs).max
-  def parquetPaths: Seq[String] =
-    (full +: incrementals).filterNot(_.isEmpty).map(_.path)
+  def parquetFiles: Seq[ExportFile] = (full +: incrementals).filterNot(_.isEmpty)
 }
 
 /** Batch-side discovery of the reference's export layout.
@@ -157,14 +156,23 @@ object ExportCatalog {
     * exactly the planned files, then a single latest-wins merge. The union of
     * full + incrementals never round-trips through per-file loops — Spark
     * schedules all row groups of all selected files as one scan stage.
+    *
+    * Rows that tie on `ord` go to the newer file, as the reference's `>=`
+    * upsert guard (db.py:884-893) lets the later window win: each row's
+    * priority is its file's window end, looked up by file name in a literal
+    * map (cheaper per row than parsing the name again).
     */
   def load(
       spark: SparkSession,
       p: LoadPlan,
       keys: Seq[String],
       ord: Seq[String]): DataFrame = {
-    val paths = p.parquetPaths
-    require(paths.nonEmpty, "plan contains only .empty windows")
-    MergeOps.latestByKey(spark.read.parquet(paths: _*), keys, ord)
+    import org.apache.spark.sql.functions.{col, element_at, typedLit}
+    val files = p.parquetFiles
+    require(files.nonEmpty, "plan contains only .empty windows")
+    val windowEnd = typedLit(files.map(f => new Path(f.path).getName -> f.endTs).toMap)
+    val df = spark.read.parquet(files.map(_.path): _*)
+      .withColumn("_prio", element_at(windowEnd, col("_metadata.file_name")))
+    MergeOps.latestByKey(df, keys, ord :+ "_prio").drop("_prio")
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.operators.MergeOps
@@ -20,6 +20,15 @@ object IncrementalStream {
   /** Tail `inputDir` for new parquet slices and maintain a latest-wins state
     * table at `stateDir` (parquet, overwritten per micro-batch after merging
     * with the previous state — a MERGE INTO in Delta/Iceberg deployments).
+    *
+    * The merge is built on the caller's `spark`, never on
+    * `batch.sparkSession`: every query start clones the session, local
+    * executors give each clone its own classloader, and generated classes
+    * are cached per classloader — a merge on the clone recompiles every
+    * generated class of the merge on every window. The prior state is read
+    * with `schemaSample`'s schema (no inference job per window), and the
+    * first window merges into an empty frame of that schema, so every
+    * window takes the same path.
     */
   def run(
       spark: SparkSession,
@@ -29,8 +38,9 @@ object IncrementalStream {
       ord: Seq[String],
       stateDir: String,
       checkpointDir: String): StreamingQuery = {
+    val schema = schemaSample.schema
     val stream = spark.readStream
-      .schema(schemaSample.schema)
+      .schema(schema)
       .parquet(inputDir)
 
     stream.writeStream
@@ -42,7 +52,7 @@ object IncrementalStream {
         // off the local disk and silently drop prior state every batch.
         import org.apache.hadoop.fs.Path
         val dst = new Path(stateDir)
-        val fs = dst.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val prev = new Path(stateDir + "_prev")
         val tmp = new Path(stateDir + "_tmp")
         // Hadoop FileSystem.rename signals failure by RETURNING FALSE, not
@@ -53,10 +63,10 @@ object IncrementalStream {
         // recover from a crash that landed between the two renames below:
         // current gone but the set-aside copy survives
         if (!fs.exists(dst) && fs.exists(prev)) renameOrFail(prev, dst)
-        val merged =
-          if (fs.exists(dst))
-            MergeOps.snapshotMerge(batch.sparkSession.read.parquet(stateDir), batch, keys, ord)
-          else MergeOps.latestByKey(batch, keys, ord)
+        val prior =
+          if (fs.exists(dst)) spark.read.schema(schema).parquet(stateDir)
+          else spark.createDataFrame(java.util.List.of[Row](), schema)
+        val merged = MergeOps.snapshotMerge(prior, batch, keys, ord)
         // stage → set aside → swap: at every instant either `dst` or `prev`
         // holds a complete state table (delete-then-rename would not)
         merged.write.mode("overwrite").parquet(tmp.toString)

@@ -19,6 +19,14 @@ class SourcesStreamingSpec extends SparkSpec {
     val f = new java.io.File(path); f.getParentFile.mkdirs(); f.createNewFile(); ()
   }
 
+  /** Writes `rows` as ONE parquet file named `name` in `dir` (an export object). */
+  private def publishExport(dir: String, name: String, rows: Seq[(Long, Long, String)]): Unit = {
+    rows.toDF("k", "ts", "v").coalesce(1).write.mode("overwrite").parquet(s"$dir/st_$name")
+    val part = new java.io.File(s"$dir/st_$name").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    part.renameTo(new java.io.File(s"$dir/$name")); ()
+  }
+
   test("export catalog: parse, latest full, contiguous chain, .empty advances cursor") {
     val dir = Files.createTempDirectory("graft-exports").toFile.getAbsolutePath
 
@@ -57,7 +65,7 @@ class SourcesStreamingSpec extends SparkSpec {
       Seq((200L, 300L), (300L, 400L), (400L, 500L)))
     assert(plan.asOf == 500L)
     // .empty contributes no path but advanced the chain to 400-500
-    assert(plan.parquetPaths.size == 3)
+    assert(plan.parquetFiles.size == 3)
 
     val state = ExportCatalog.load(spark, plan, Seq("k"), Seq("ts"))
       .orderBy("k").as[(Long, Long, String)].collect().toSeq
@@ -92,16 +100,27 @@ class SourcesStreamingSpec extends SparkSpec {
     assert(ExportCatalog.loadBackfill(spark, bf, "ts", 251L, 649L).count() == 1)
   }
 
+  test("export catalog load: on an ord tie the newer file wins, whatever its payload") {
+    val dir = Files.createTempDirectory("graft-exports-tie").toFile.getAbsolutePath
+    def publish(name: String, rows: Seq[(Long, Long, String)]): Unit = publishExport(dir, name, rows)
+    // same key and ts; the incremental's payload sorts BELOW the full's, so
+    // a tie broken on the other columns would keep the full's row
+    publish("public-things-0-100.parquet", Seq((1L, 50L, "zz-full"), (2L, 60L, "b")))
+    publish("public-things-100-200.parquet", Seq((1L, 50L, "aa-inc")))
+    publish("public-things-200-300.parquet", Seq((2L, 60L, "a-inc2")))
+
+    val plan = ExportCatalog.plan(ExportCatalog.list(spark, dir), "things").get
+    val state = ExportCatalog.load(spark, plan, Seq("k"), Seq("ts"))
+    assert(state.columns.toSeq == Seq("k", "ts", "v"))
+    assert(state.orderBy("k").as[(Long, Long, String)].collect().toSeq ==
+      Seq((1L, 50L, "aa-inc"), (2L, 60L, "a-inc2")))
+  }
+
   test("end-to-end: export discovery → load → JDBC upsert → latest-wins state") {
     // the reference's whole pipeline in one pass: list S3-style exports,
     // plan full+incrementals, merge, upsert into Postgres-shaped sink
     val dir = Files.createTempDirectory("graft-e2e").toFile.getAbsolutePath
-    def publish(name: String, rows: Seq[(Long, Long, String)]): Unit = {
-      rows.toDF("k", "ts", "v").coalesce(1).write.mode("overwrite").parquet(s"$dir/st_$name")
-      val part = new java.io.File(s"$dir/st_$name").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      part.renameTo(new java.io.File(s"$dir/$name")); ()
-    }
+    def publish(name: String, rows: Seq[(Long, Long, String)]): Unit = publishExport(dir, name, rows)
     publish("public-things-0-100.parquet", Seq((1L, 10L, "full1"), (2L, 20L, "full2")))
     publish("public-things-100-200.parquet", Seq((1L, 150L, "inc1"), (3L, 120L, "new3")))
     publish("public-things-200-300.parquet", Seq((2L, 15L, "stale2"), (3L, 250L, "newer3")))

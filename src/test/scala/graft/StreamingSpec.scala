@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions._
 import graft.streaming.{IncrementalStream, MetricEvent, TrailingWindow}
 
@@ -25,7 +26,7 @@ class StreamingSpec extends SparkSpec {
 
     val q = IncrementalStream.run(
       spark, s"$in/*", slice1, Seq("k"), Seq("ts"), state, ckpt)
-    q.awaitTermination(120000)
+    assert(q.awaitTermination(120000), "first run did not finish")
 
     val got = spark.read.parquet(state).orderBy("k")
       .as[(Long, Long, String)].collect().toSeq
@@ -36,7 +37,7 @@ class StreamingSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$in/slice3")
     val q2 = IncrementalStream.run(
       spark, s"$in/*", slice1, Seq("k"), Seq("ts"), state, ckpt)
-    q2.awaitTermination(120000)
+    assert(q2.awaitTermination(120000), "resumed run did not finish")
 
     val got2 = spark.read.parquet(state).orderBy("k")
       .as[(Long, Long, String)].collect().toSeq
@@ -50,22 +51,49 @@ class StreamingSpec extends SparkSpec {
 
     Seq((1L, 10L, "a"), (2L, 10L, "b")).toDF("k", "ts", "v")
       .coalesce(1).write.parquet(s"$in/slice1")
-    IncrementalStream.run(spark, s"$in/*", Seq((0L, 0L, "")).toDF("k", "ts", "v"),
-      Seq("k"), Seq("ts"), state, ckpt).awaitTermination(120000)
+    assert(IncrementalStream.run(spark, s"$in/*", Seq((0L, 0L, "")).toDF("k", "ts", "v"),
+      Seq("k"), Seq("ts"), state, ckpt).awaitTermination(120000), "first run did not finish")
 
     // simulate the torn swap: current renamed aside, replacement never landed
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
     assert(fs.rename(new org.apache.hadoop.fs.Path(state), new org.apache.hadoop.fs.Path(state + "_prev")))
 
     Seq((3L, 5L, "c")).toDF("k", "ts", "v").coalesce(1).write.parquet(s"$in/slice2")
-    IncrementalStream.run(spark, s"$in/*", Seq((0L, 0L, "")).toDF("k", "ts", "v"),
-      Seq("k"), Seq("ts"), state, ckpt).awaitTermination(120000)
+    assert(IncrementalStream.run(spark, s"$in/*", Seq((0L, 0L, "")).toDF("k", "ts", "v"),
+      Seq("k"), Seq("ts"), state, ckpt).awaitTermination(120000), "recovering run did not finish")
 
     // pre-crash state recovered AND the new slice merged
     val got = spark.read.parquet(state).orderBy("k")
       .as[(Long, Long, String)].collect().toSeq
     assert(got == Seq((1L, 10L, "a"), (2L, 10L, "b"), (3L, 5L, "c")))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(state + "_prev")))
+  }
+
+  test("a warm tail window compiles no generated class and stays latest-wins") {
+    // each stream start clones the session; a merge on the clone would
+    // recompile every generated class of the merge on every window
+    val base = Files.createTempDirectory("graft-stream-codegen").toFile.getAbsolutePath
+    val in = s"$base/incoming"; val state = s"$base/state"; val ckpt = s"$base/ckpt"
+    new java.io.File(in).mkdirs()
+    val sample = Seq((0L, 0L, "")).toDF("k", "ts", "v")
+    /** Lands one slice, runs one window; returns the window's compile ns. */
+    def window(name: String, rows: Seq[(Long, Long, String)]): Long = {
+      rows.toDF("k", "ts", "v").coalesce(1).write.parquet(s"$in/$name")
+      val before = CodeGenerator.compileTime
+      assert(IncrementalStream.run(spark, s"$in/*", sample, Seq("k"), Seq("ts"), state, ckpt)
+        .awaitTermination(120000), s"window $name did not finish")
+      CodeGenerator.compileTime - before
+    }
+
+    window("slice1", Seq((1L, 10L, "a"), (2L, 10L, "b"))) // no state yet
+    window("slice2", Seq((1L, 20L, "a2"), (3L, 5L, "c"))) // warm: state + batch
+    val compileNs = window("slice3", Seq((1L, 15L, "stale"), (2L, 30L, "b3")))
+    assert(compileNs == 0L,
+      s"a warm window spent ${compileNs / 1e6} ms compiling generated classes")
+
+    val got = spark.read.parquet(state).orderBy("k")
+      .as[(Long, Long, String)].collect().toSeq
+    assert(got == Seq((1L, 20L, "a2"), (2L, 30L, "b3"), (3L, 5L, "c")))
   }
 
   test("trailing-24h metrics: streaming equals batch q44 on the same slice") {
